@@ -13,7 +13,7 @@ The reference validates Kafka-Connect properties (connection JSON,
 heartbeat interval bounds, capture mode, start/end instants, table
 regexes, change-stream existence); the Spark engine's analogues are the
 constructor parameters validated here (log path + wire-format stream
-presence, replay window, fold/sink/GC/scaler knobs, table filters,
+presence, replay window, fold/compaction/GC/scaler knobs, table filters,
 checkpoint-resume compatibility).
 """
 
@@ -31,8 +31,6 @@ END_AFTER_START_MSG = "End time must be after start time"
 
 WIRE_FORMATS = ("struct", "pg_json", "proto")
 WIRE_LOG_DIR = {"struct": "events", "pg_json": "events_pg", "proto": "events_proto"}
-SINK_MODES = ("mor", "cow")
-COMPACT_MODES = ("async", "sync")
 SKEW_MODES = ("adaptive", "fused", "salted")
 STUCK_POLICIES = ("metric", "requery", "fail")
 
@@ -89,8 +87,6 @@ def validate_engine_config(
     n_batches,
     n_buckets,
     wire_format: str,
-    sink_mode: str,
-    compact_mode: str,
     compact_every,
     skew_mode: str,
     skew_threshold,
@@ -105,7 +101,6 @@ def validate_engine_config(
     scaler_max,
     desired_tokens_per_task,
     events_per_task_target,
-    token_inlist_max,
     tables: dict | None,
     checkpoint: dict | None,
 ) -> list[ConfigError]:
@@ -157,8 +152,6 @@ def validate_engine_config(
         errors.append(ConfigError("end_us", end_us, END_AFTER_START_MSG))
 
     # --- enums ---
-    _enum(errors, "sink_mode", sink_mode, SINK_MODES)
-    _enum(errors, "compact_mode", compact_mode, COMPACT_MODES)
     _enum(errors, "skew_mode", skew_mode, SKEW_MODES)
     _enum(errors, "stuck_policy", stuck_policy, STUCK_POLICIES)
 
@@ -184,7 +177,6 @@ def validate_engine_config(
         )
     _at_least(errors, "desired_tokens_per_task", desired_tokens_per_task, 1)
     _at_least(errors, "events_per_task_target", events_per_task_target, 1)
-    _at_least(errors, "token_inlist_max", token_inlist_max, 0)
     if not isinstance(skew_threshold, (int, float)) or not (0 < skew_threshold <= 1):
         errors.append(
             ConfigError("skew_threshold", skew_threshold, "must be in (0, 1]")

@@ -44,9 +44,10 @@ are absorbed because every aggregate is max-based (idempotent) — the
 explicit dropDuplicates shuffle is reserved for the envelope-emission
 path (operators/decode.py dedup_identity).
 
-MERGE is copy-on-write per key-bucket: only buckets containing changed
-keys are read + rewritten (sources/lake.py), keeping batch cost O(delta),
-not O(table), at 10^10-event scale.
+MERGE is merge-on-read per key-bucket: the folded batch is appended as
+delta files on the buckets holding changed keys (sources/lake.py), and
+the table's read fold and compaction apply it — batch cost stays
+O(delta), not O(table), at 10^10-event scale.
 
 Reference parity: replaces the Kafka emit + commit-callback machinery
 (/root/reference processor/SpannerChangeRecordEmitter.java:54-129,
@@ -189,7 +190,6 @@ def merge_into(
     folded: DataFrame,
     target_schema=None,
     summary: dict | None = None,
-    mode: str = "mor",
     assume_all_buckets: bool = False,
 ) -> tuple[int, list[int]]:
     """MERGE a folded batch into the table.
@@ -200,15 +200,11 @@ def merge_into(
         WHEN MATCHED THEN UPDATE SET <fold-aware column merge>
         WHEN NOT MATCHED AND NOT s._is_delete THEN INSERT
 
-    Two physical strategies:
-    - ``mor`` (default): append the folded batch (tombstones included) as
-      delta files on the touched buckets — O(batch) bytes written, no
-      reads; the key fold happens at read/compaction time
-      (sources/lake.py fold_ranked). The scale path: per-batch IO is
-      proportional to the delta, with rewrite amplification paid only at
-      compaction cadence.
-    - ``cow``: read touched buckets, full-outer merge, rewrite — lowest
-      read cost, O(touched buckets) write per batch.
+    Merge-on-read: the folded batch (tombstones included) is appended as
+    delta files on the touched buckets — O(batch) bytes written, no
+    reads; the key fold happens at read/compaction time
+    (sources/lake.py fold_ranked). Per-batch IO is proportional to the
+    delta, with rewrite amplification paid only at compaction cadence.
 
     ``target_schema`` (StructType) may extend/widen the table schema —
     online additive schema evolution applied with the same commit.
@@ -216,7 +212,6 @@ def merge_into(
     """
     key_cols = table.key_cols()
     schema = target_schema or table.schema()
-    existing_names = set(table.schema().fieldNames())
     value_cols = [
         f.name for f in schema.fields if f.name not in key_cols and f.name != CDC_TS_COL
     ]
@@ -261,75 +256,22 @@ def merge_into(
             else F.col(c).isNotNull()
         )
 
-    if mode == "mor":
-        delta = folded.select(
-            *key_cols,
-            *[F.col(c) for c in value_cols],
-            F.col("_ts").cast("long").alias(CDC_TS_COL),
-            "_is_delete",
-            "_had_delete",
-            *[wflag(c).alias(f"__set_{c}") for c in value_cols],
-        )
-        try:
-            sid = table.commit_delta(
-                delta,
-                touched,
-                schema=write_schema,
-                summary=summary,
-                pre_bucketed=pre_bucketed,
-            )
-        finally:
-            if persisted:
-                folded.unpersist()
-        return sid, touched
-
-    target_types = {f.name: f.dataType for f in schema.fields}
-    existing = table.read(buckets=touched).select(
+    delta = folded.select(
         *key_cols,
-        *[
-            (F.col(c) if c in existing_names else F.lit(None))
-            .cast(target_types[c])
-            .alias(f"__t_{c}")
-            for c in value_cols
-        ],
-        (F.col(CDC_TS_COL) if CDC_TS_COL in existing_names else F.lit(None))
-        .cast("long")
-        .alias(f"__t_{CDC_TS_COL}"),
-    )
-    src = folded.select(
-        *key_cols,
-        *[F.col(c).alias(f"__s_{c}") for c in value_cols],
-        *[wflag(c).alias(f"__w_{c}") for c in value_cols],
+        *[F.col(c) for c in value_cols],
+        F.col("_ts").cast("long").alias(CDC_TS_COL),
         "_is_delete",
         "_had_delete",
-        "_ts",
-        F.lit(True).alias("_s_present"),
+        *[wflag(c).alias(f"__set_{c}") for c in value_cols],
     )
-    j = existing.join(src, on=key_cols, how="full_outer")
-    # drop: key present in batch and folded to a tombstone
-    j = j.where(F.col("_s_present").isNull() | ~F.col("_is_delete"))
-
-    out = [F.col(c) for c in key_cols]
-    for c in value_cols:
-        # written post-barrier -> apply the batch value (even explicit
-        # NULL); delete with no re-write -> wiped (batch value is NULL);
-        # otherwise the target value survives
-        out.append(
-            F.when(F.col("_s_present").isNull(), F.col(f"__t_{c}"))
-            .when(F.col(f"__w_{c}") | F.col("_had_delete"), F.col(f"__s_{c}"))
-            .otherwise(F.col(f"__t_{c}"))
-            .alias(c)
-        )
-    out.append(
-        F.when(F.col("_s_present").isNotNull(), F.col("_ts"))
-        .otherwise(F.col(f"__t_{CDC_TS_COL}"))
-        .cast("long")
-        .alias(CDC_TS_COL)
-    )
-    merged = j.select(*out)
-
     try:
-        sid = table.commit_merge(merged, touched, schema=write_schema, summary=summary)
+        sid = table.commit_delta(
+            delta,
+            touched,
+            schema=write_schema,
+            summary=summary,
+            pre_bucketed=pre_bucketed,
+        )
     finally:
         if persisted:
             folded.unpersist()

@@ -7,10 +7,12 @@ lake-table semantics the CDC sink needs, with the same scale properties:
   snapshot dirs; a snapshot manifest (JSON) lists files per key-bucket;
   the CURRENT pointer is flipped with an atomic ``os.replace``. A crashed
   writer leaves orphan files that are never referenced (exactly-once).
-- **Bucketed copy-on-write MERGE**: rows are hash-bucketed on the primary
-  key. A batch only rewrites the buckets it touches; untouched buckets'
-  file lists are carried forward by reference. At 100 TB this is the
-  difference between O(delta) and O(table) per batch.
+- **Bucketed merge-on-read MERGE**: rows are hash-bucketed on the primary
+  key. A batch appends folded delta files to the buckets it touches;
+  untouched buckets' file lists are carried forward by reference, reads
+  fold base + deltas per key, and compaction rewrites only delta-bearing
+  buckets. At 100 TB this is the difference between O(delta) and
+  O(table) per batch.
 - **Additive schema evolution with cast-on-read**: each data file group
   records its schema id; reads group files by schema id and cast-union to
   the current schema (add column -> null backfill, INT64->FLOAT64 widen),
@@ -246,28 +248,6 @@ class LakeTable:
         self._set_current(new_id)
         return new_id
 
-    def commit_merge(
-        self,
-        merged_df: DataFrame,
-        touched_buckets: list[int],
-        schema: T.StructType | None = None,
-        summary: dict | None = None,
-    ) -> int:
-        """Copy-on-write commit: rewrite touched buckets from merged_df,
-        carry untouched buckets forward by reference."""
-        prev, new_id, schema, schema_id, schemas = self._next_snapshot(schema)
-        new_files = self._write_data_files(
-            merged_df, schema, prev["key_cols"], prev["n_buckets"], new_id
-        )
-        buckets = {
-            b: fs for b, fs in prev["buckets"].items() if int(b) not in set(touched_buckets)
-        }
-        for b in touched_buckets:
-            buckets[str(b)] = [
-                [p, schema_id, 0, "base", new_id] for p in new_files.get(b, [])
-            ]
-        return self._finish_snapshot(prev, new_id, schema_id, schemas, buckets, summary)
-
     def commit_delta(
         self,
         delta_df: DataFrame,
@@ -316,29 +296,14 @@ class LakeTable:
             depth = max(depth, sum(1 for e in fs if _entry(e)[3] == "delta"))
         return depth
 
-    def compact(self, schema: T.StructType | None = None, summary: dict | None = None) -> int:
+    def compact(self, summary: dict | None = None) -> int:
         """Fold base+deltas and rewrite every delta-bearing bucket as base
-        files (selective: delta-free buckets are carried by reference)."""
-        snap = self.snapshot()
-        dirty = [
-            int(b)
-            for b, fs in snap["buckets"].items()
-            if any(_entry(e)[3] == "delta" for e in fs)
-        ]
-        if not dirty:
-            return snap["id"]
-        folded = self.read(buckets=dirty)
-        prev, new_id, schema, schema_id, schemas = self._next_snapshot(schema)
-        new_files = self._write_data_files(
-            folded, schema, prev["key_cols"], prev["n_buckets"], new_id
-        )
-        buckets = {b: fs for b, fs in prev["buckets"].items() if int(b) not in set(dirty)}
-        for b in dirty:
-            buckets[str(b)] = [[p, schema_id, 0, "base", new_id] for p in new_files.get(b, [])]
-        s = dict(summary or {})
-        s["op"] = "compact"
-        s["buckets_compacted"] = len(dirty)
-        return self._finish_snapshot(prev, new_id, schema_id, schemas, buckets, s)
+        files (selective: delta-free buckets are carried by reference) —
+        prepare and apply back to back on the current snapshot."""
+        prep = self.compact_prepare()
+        if prep is None:
+            return self.current_snapshot_id()
+        return self.compact_apply(prep, summary)
 
     def compact_prepare(self, sid: int | None = None) -> dict | None:
         """Phase 1 of ASYNC compaction (the maintenance-lane shape real
@@ -381,8 +346,8 @@ class LakeTable:
         (the engine batch loop).
 
         Precondition guard: if any dirty bucket holds a BASE entry committed
-        AFTER ``base_sid`` (a commit_merge / concurrent compaction landed
-        between prepare and apply), applying the stale prepared base would
+        AFTER ``base_sid`` (a concurrent compaction landed between prepare
+        and apply), applying the stale prepared base would
         silently drop that rewrite — raise instead of losing data."""
         base_sid = prep["base_sid"]
         prev, new_id, schema, schema_id, schemas = self._next_snapshot(None)

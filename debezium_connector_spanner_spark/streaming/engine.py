@@ -11,8 +11,9 @@ machine. Per batch (reference parity in parentheses, files under
    task/ConflictResolver.java:23-34 — single-driver state makes the
    min-parent-owner rule a plain dedup).
 2. **Scan**: one predicate-pruned read of the event log for ALL active
-   partitions at once — partition_token IN (active) via broadcast join
-   against the per-token offset table, commit_ts in (offset, batch_end].
+   partitions at once — a literal partition_token IN (active) list,
+   commit_ts in (offset, batch_end] with exact per-token offsets via a
+   broadcast join against the per-token offset table.
    Token dirs + sorted row groups give partition/rowgroup pruning.
 3. **Progress**: per-token aggregates (count, max ts, end markers) drive
    offsets, heartbeat handling (K2) and per-partition lineage metrics (M1/M3).
@@ -127,10 +128,7 @@ class CdcReplayEngine:
         base_df: DataFrame | None = None,
         tables: dict[str, tuple[TableSchema, DataFrame | None]] | None = None,
         n_buckets: int = 16,
-        use_pandas_udf_decode: bool = False,
-        sink_mode: str = "mor",
         compact_every: int = 6,
-        compact_mode: str = "async",  # 'async' (maintenance lane) | 'sync'
         # 'adaptive' (default): per batch per table, pick the fused
         # single-shuffle fold unless the previous batch OBSERVED a hot key
         # (one key-hash cell holding >= skew_threshold of the records), in
@@ -180,26 +178,15 @@ class CdcReplayEngine:
         # reducer's unit is rows — a 3-token mega-key batch still needs a
         # wide grant. 64k events/worker keeps task granularity ~100ms.
         events_per_task_target: int = 65536,
-        # S1 scan pruning: above this many active tokens the literal
-        # IN-list predicate is skipped and token filtering rides the
-        # (already present) broadcast offsets equi-join — dynamic
-        # partition pruning then prunes token dirs at runtime instead of
-        # plan time. Literal IN-lists are faster to plan and prune
-        # statically at Spanner-scale token counts (hundreds) but blow up
-        # expression-tree size/analysis time at 10^5+ tokens.
-        token_inlist_max: int = 4096,
     ):
         self.spark = spark
         self.events_path = events_path
         self.table_root = table_root
         self.checkpoint_dir = checkpoint_dir
-        self.use_pandas_udf_decode = use_pandas_udf_decode
-        self.sink_mode = sink_mode
         self.compact_every = compact_every
-        self.compact_mode = compact_mode
         # async-compaction maintenance lane: one background driver thread
         # runs compact_prepare's Spark job; the commit stays in the loop.
-        # Created lazily (only mor+async uses it) and shut down at the end
+        # Created lazily (on the first compaction) and shut down at the end
         # of run() so no non-daemon thread outlives the engine.
         self._maint_pool = None
         self._compact_futures: dict[str, object] = {}
@@ -222,7 +209,6 @@ class CdcReplayEngine:
         self.gc_keep = max(2, gc_keep)
         self.wire_format = wire_format
         self.grow_bucket_bytes = grow_bucket_bytes
-        self.token_inlist_max = token_inlist_max
         # O7/O8 stuck-partition watchdog (PartitionQueryingMonitor.java:33-120,
         # FinishPartitionWatchDog): an active partition that emits nothing
         # (no data, no heartbeat) for max_stale_batches consecutive batches
@@ -265,6 +251,7 @@ class CdcReplayEngine:
         # create / checkpoint write): every violation reported at once
         # (config/validation/ConfigurationValidator.java:33-59)
         from debezium_connector_spanner_spark.config import (
+            WIRE_LOG_DIR,
             ConfigValidationError,
             validate_engine_config,
         )
@@ -277,8 +264,6 @@ class CdcReplayEngine:
             n_batches=n_batches,
             n_buckets=n_buckets,
             wire_format=wire_format,
-            sink_mode=sink_mode,
-            compact_mode=compact_mode,
             compact_every=compact_every,
             skew_mode=skew_mode,
             skew_threshold=skew_threshold,
@@ -293,7 +278,6 @@ class CdcReplayEngine:
             scaler_max=scaler_max,
             desired_tokens_per_task=desired_tokens_per_task,
             events_per_task_target=events_per_task_target,
-            token_inlist_max=token_inlist_max,
             tables=tables,
             checkpoint=ckpt,
         )
@@ -372,25 +356,21 @@ class CdcReplayEngine:
         # pruned window at 13/32MB splits (tools/diag_scan_cost.py). The
         # value is derived from input size and core count, never a
         # constant tuned to one scale; _run() sets it for the replay's
-        # jobs and close() restores the session default.
+        # jobs and close() restores the session default. Validation has
+        # proven the log dir exists; an empty log keeps the default.
+        ev_dir = os.path.join(self.events_path, WIRE_LOG_DIR[self.wire_format])
+        total = sum(
+            os.path.getsize(os.path.join(r, f))
+            for r, _, fs in os.walk(ev_dir)
+            for f in fs
+        )
         self._scan_split_bytes = None
-        try:
-            sub = {"pg_json": "events_pg", "proto": "events_proto"}.get(
-                self.wire_format, "events"
-            )
-            ev_dir = os.path.join(self.events_path, sub)
-            total = sum(
-                os.path.getsize(os.path.join(r, f))
-                for r, _, fs in os.walk(ev_dir)
-                for f in fs
-            )
+        if total:
             cores = max(1, spark.sparkContext.defaultParallelism)
             per_batch = total / max(1, self.n_batches)
             self._scan_split_bytes = int(
                 min(max(per_batch / (4 * cores), 2 * 1024 * 1024), 64 * 1024 * 1024)
             )
-        except OSError:
-            pass  # missing dir (exotic tests): keep the session default
         self._prev_split_conf = None
 
     # ------------------------------------------------------------- layout
@@ -709,9 +689,13 @@ class CdcReplayEngine:
                 prep = fut.result()
                 del self._compact_futures[name]
                 if prep is not None:
-                    sids[name] = self.tables[name].table.compact_apply(
+                    st = self.tables[name]
+                    sids[name] = st.table.compact_apply(
                         prep, summary={"batch_id": self.batch_id, "at": "drain"}
                     )
+                    grown = self._maybe_grow(st, self.batch_id)
+                    if grown is not None:
+                        sids[name] = grown
                     changed = True
             if changed:
                 self._checkpoint(sids)
@@ -784,14 +768,6 @@ class CdcReplayEngine:
         lo_us = min(
             (self.tokens[t].offset_us or self.tokens[t].start_us - 1) for t in active
         )
-        # Token filter: a literal IN-list prunes token dirs at PLAN time
-        # and is the fast path for Spanner-scale token counts (hundreds).
-        # Past token_inlist_max the literal list itself becomes the cost
-        # (expression-tree size, analysis time), so filtering instead
-        # rides the broadcast offsets equi-join below — correctness is
-        # identical (inner join on partition_token keeps exactly the
-        # active tokens) and dynamic partition pruning recovers the dir
-        # pruning at runtime from the broadcast side.
         # Proto wire: prune the RAW log (filters on plain log columns push
         # to the parquet scan) and decode only the surviving slice —
         # filters placed above the mapInPandas decode would not push
@@ -805,10 +781,9 @@ class CdcReplayEngine:
 
             ev = self._proto_log_cached
             decoder = decode_proto_wire
-        if len(active) <= self.token_inlist_max:
-            ev = ev.where(F.col("partition_token").isin(active))
         ev = ev.where(
-            (F.col("commit_ts") > F.timestamp_micros(F.lit(lo_us)))
+            F.col("partition_token").isin(active)
+            & (F.col("commit_ts") > F.timestamp_micros(F.lit(lo_us)))
             & (F.col("commit_ts") <= F.timestamp_micros(F.lit(batch_end_us)))
         )
         ev = ev.join(F.broadcast(offsets), "partition_token")
@@ -1114,57 +1089,38 @@ class CdcReplayEngine:
                 )
             # MOR compaction: bound read-time delta depth; amortizes the
             # rewrite across compact_every batches (O13-adjacent state
-            # bounding for the data files themselves). Default is the
-            # maintenance-lane shape (compact_mode='async'): the fold +
-            # file write runs as a concurrent Spark job in a driver
+            # bounding for the data files themselves). The fold + file
+            # write runs as a concurrent Spark job in a driver
             # maintenance thread against an immutable snapshot, and only
             # the metadata rebase-commit happens here in the (single-
             # threaded) batch loop — the ingest path never stalls on a
             # table rewrite, exactly like Iceberg rewrite_data_files /
             # Delta OPTIMIZE running beside the stream.
-            if self.sink_mode == "mor":
-                for name, st in self.tables.items():
-                    fut = self._compact_futures.get(name)
-                    if fut is not None and fut.done():
-                        del self._compact_futures[name]
-                        prep = fut.result()  # surfaces worker errors
-                        if prep is not None:
-                            t_stage = time.monotonic()
-                            snapshot_ids[name] = st.table.compact_apply(
-                                prep, summary={"batch_id": batch_id}
-                            )
-                            timings["compact_apply_s"] = round(
-                                time.monotonic() - t_stage, 3
-                            )
-                            grown = self._maybe_grow(st, batch_id)
-                            if grown is not None:
-                                snapshot_ids[name] = grown
-                    elif (
-                        fut is None
-                        and st.table.delta_depth() >= self.compact_every
-                    ):
-                        if self.compact_mode == "sync":
-                            t_stage = time.monotonic()
-                            # schema=None: compaction keeps the snapshot
-                            # schema (incl. the __cdc_ts lineage column)
-                            snapshot_ids[name] = st.table.compact(
-                                summary={"batch_id": batch_id}
-                            )
-                            timings["compact_s"] = round(
-                                time.monotonic() - t_stage, 3
-                            )
-                            grown = self._maybe_grow(st, batch_id)
-                            if grown is not None:
-                                snapshot_ids[name] = grown
-                        else:
-                            self._compact_futures[name] = (
-                                self._pool("_maint_pool", "cdc-maint").submit(
-                                    self._maint_compact_prepare,
-                                    st.table,
-                                    st.table.current_snapshot_id(),
-                                )
-                            )
-                            timings["compact_submitted"] = 1.0
+            for name, st in self.tables.items():
+                fut = self._compact_futures.get(name)
+                if fut is not None and fut.done():
+                    del self._compact_futures[name]
+                    prep = fut.result()  # surfaces worker errors
+                    if prep is not None:
+                        t_stage = time.monotonic()
+                        snapshot_ids[name] = st.table.compact_apply(
+                            prep, summary={"batch_id": batch_id}
+                        )
+                        timings["compact_apply_s"] = round(
+                            time.monotonic() - t_stage, 3
+                        )
+                        grown = self._maybe_grow(st, batch_id)
+                        if grown is not None:
+                            snapshot_ids[name] = grown
+                elif fut is None and st.table.delta_depth() >= self.compact_every:
+                    self._compact_futures[name] = self._pool(
+                        "_maint_pool", "cdc-maint"
+                    ).submit(
+                        self._maint_compact_prepare,
+                        st.table,
+                        st.table.current_snapshot_id(),
+                    )
+                    timings["compact_submitted"] = 1.0
 
             for tok in active:
                 r = ctrl_by_token.get(tok)
@@ -1343,7 +1299,7 @@ class CdcReplayEngine:
         from pyspark.sql import Observation
 
         table = self.tables[name].table
-        decoded = decode_mods(scan, schema, use_pandas_udf=self.use_pandas_udf_decode)
+        decoded = decode_mods(scan, schema)
         obs = Observation(f"batch-{batch_id}-{name}-a{attempt}")
         is_rec = F.col("mod_number") == 0  # 1 per record, not per mod
         obs_aggs = [
@@ -1395,7 +1351,6 @@ class CdcReplayEngine:
             folded,
             target_schema=schema.spark_struct(),
             summary={"batch_id": batch_id, "attempt": attempt, "table": name},
-            mode=self.sink_mode,
             # statistically every bucket is hit by a sizable batch — skip
             # the probe job (empty buckets add no files)
             assume_all_buckets=True,
@@ -1442,10 +1397,7 @@ class CdcReplayEngine:
             windows, "w_lo long, w_hi long, w_stamp long"
         )
         ev = self._events_df().where(F.col("table_name") == name)
-        decoded = decode_mods(
-            ev, self.tables[name].schema, use_pandas_udf=self.use_pandas_udf_decode,
-            include_old=True,
-        )
+        decoded = decode_mods(ev, self.tables[name].schema, include_old=True)
         ts = F.unix_micros("commit_ts")
         joined = decoded.join(
             F.broadcast(wdf), (ts > F.col("w_lo")) & (ts <= F.col("w_hi")), "left"

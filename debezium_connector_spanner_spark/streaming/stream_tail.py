@@ -8,7 +8,7 @@ deterministic/batch-windowed shape with the partition-DAG gate.
 
 Ordering contract: within one micro-batch the fold orders by
 (commit_ts, record_sequence, mod_number), which is exact. ACROSS
-micro-batches with the default MOR sink, the read-time fold orders rows
+micro-batches, the merge-on-read sink's read-time fold orders rows
 by (__cdc_ts, snapshot rank), so out-of-order file arrival (e.g.
 maxFilesPerTrigger slicing overlapping file time ranges) still resolves
 each COLUMN to its latest-commit-ts write. Remaining caveat: per-key
@@ -41,7 +41,6 @@ def stream_events_into_table(
     schema: TableSchema,
     checkpoint_dir: str,
     max_files_per_trigger: int | None = None,
-    sink_mode: str = "mor",
     compact_every: int = 4,
     wire_format: str = "struct",
 ):
@@ -91,10 +90,9 @@ def stream_events_into_table(
             folded,
             target_schema=schema.spark_struct(),
             summary={"stream_batch_id": batch_id},
-            mode=sink_mode,
             assume_all_buckets=True,
         )
-        if sink_mode == "mor" and table.delta_depth() >= compact_every:
+        if table.delta_depth() >= compact_every:
             table.compact(summary={"stream_batch_id": batch_id})
 
     q = (

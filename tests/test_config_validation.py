@@ -34,8 +34,6 @@ VALID = dict(
     n_batches=4,
     n_buckets=8,
     wire_format="struct",
-    sink_mode="mor",
-    compact_mode="async",
     compact_every=6,
     skew_mode="adaptive",
     skew_threshold=0.6,
@@ -50,7 +48,6 @@ VALID = dict(
     scaler_max=None,
     desired_tokens_per_task=2,
     events_per_task_target=65536,
-    token_inlist_max=4096,
     tables={"repos": (REPOS_SCHEMA_V1, None)},
     checkpoint=None,
 )

@@ -2,7 +2,7 @@
 column writes, explicit nulls, duplicate records, multi-mod records,
 random base rows), decode -> fold -> MERGE must reproduce a direct
 pandas state-machine simulation — in BOTH fold shapes (fused and
-salted) and BOTH sink modes (MOR delta and CoW rewrite).
+salted), through the merge-on-read delta sink.
 
 Complements the targeted semantics tests with shrinking random
 coverage of the delete-barrier / written-flag / identity-dedup
@@ -112,8 +112,8 @@ def _simulate(rows, base_rows):
 
 
 @settings(max_examples=12, deadline=None)
-@given(stream=stream_st, base_mask=base_st, salted=st.booleans(), mode=st.sampled_from(["mor", "cow"]))
-def test_fold_merge_matches_state_machine(spark, stream, base_mask, salted, mode):
+@given(stream=stream_st, base_mask=base_st, salted=st.booleans())
+def test_fold_merge_matches_state_machine(spark, stream, base_mask, salted):
     rows = _mk_rows(stream)
     base_rows = [
         {"repo": KEYS[i][0], "path": KEYS[i][1], "commit": f"b{i}", "lang": None, "content": f"bc{i}"}
@@ -150,9 +150,9 @@ def test_fold_merge_matches_state_machine(spark, stream, base_mask, salted, mode
         n_buckets=2,
         initial_df=base_df,
     )
-    merge_into(t, folded, target_schema=REPOS_SCHEMA_V1.spark_struct(), mode=mode)
+    merge_into(t, folded, target_schema=REPOS_SCHEMA_V1.spark_struct())
     got = {
         (r["repo"], r["path"]): {c: r[c] for c in COLS}
         for r in t.read().drop("__cdc_ts").collect()
     }
-    assert got == want, (salted, mode, rows)
+    assert got == want, (salted, rows)

@@ -81,21 +81,23 @@ def test_compact_apply_guards_newer_base(spark, tmp_root):
         spark, os.path.join(tmp_root, "tbl"), REPOS_SCHEMA_V1.spark_struct(), ["repo", "path"], 1
     )
     schema = REPOS_SCHEMA_V1.spark_struct()
-    merge_into(t, _folded_batch(spark, 1_000, "a"), target_schema=schema, mode="mor")
-    merge_into(t, _folded_batch(spark, 2_000, "b"), target_schema=schema, mode="mor")
+    merge_into(t, _folded_batch(spark, 1_000, "a"), target_schema=schema)
+    merge_into(t, _folded_batch(spark, 2_000, "b"), target_schema=schema)
     prep = t.compact_prepare(t.current_snapshot_id())
     assert prep is not None
-    # a base rewrite lands between prepare and apply (violates the async
-    # lane's precondition): apply must raise, not silently drop it
-    merge_into(t, _folded_batch(spark, 3_000, "c"), target_schema=schema, mode="cow")
-    with pytest.raises(RuntimeError, match="compact_apply"):
+    # a base rewrite lands between prepare and apply (a second compaction
+    # prepared and applied in the gap violates the async lane's
+    # single-writer precondition): apply must raise, not silently drop it
+    merge_into(t, _folded_batch(spark, 3_000, "c"), target_schema=schema)
+    t.compact_apply(t.compact_prepare(t.current_snapshot_id()))
+    with pytest.raises(RuntimeError, match="rewritten at snapshot"):
         t.compact_apply(prep)
     # state is untouched by the refused apply and newest write survives
     assert t.read().collect()[0]["commit"] == "c"
     # delta-only commits after prepare remain rebase-able (normal MOR path)
-    merge_into(t, _folded_batch(spark, 4_000, "d"), target_schema=schema, mode="mor")
+    merge_into(t, _folded_batch(spark, 4_000, "d"), target_schema=schema)
     prep2 = t.compact_prepare(t.current_snapshot_id())
-    merge_into(t, _folded_batch(spark, 5_000, "e"), target_schema=schema, mode="mor")
+    merge_into(t, _folded_batch(spark, 5_000, "e"), target_schema=schema)
     t.compact_apply(prep2)
     assert t.read().collect()[0]["commit"] == "e"
 
@@ -255,7 +257,6 @@ def test_bucket_growth_metadata_only(spark, tmp_root):
         base_df=spark.read.parquet(os.path.join(fx, "base_repos.parquet")),
         n_buckets=2,
         compact_every=2,
-        compact_mode="sync",
         grow_bucket_bytes=1,  # tiny target -> growth triggers immediately
     )
     eng.run()

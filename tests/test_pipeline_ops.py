@@ -211,66 +211,6 @@ def test_real_media_kernels_decode_and_extract(spark):
     assert np.allclose(out[3]["features"], _stub_features(junk))
 
 
-def test_pandas_udf_decode_matches_native(spark, tmp_root):
-    """The Arrow pandas-UDF decode path (dynamic-schema fallback) must
-    agree with the from_json fast path."""
-    from debezium_connector_spanner_spark.fixtures.generator import (
-        GeneratorConfig,
-        write_fixture,
-    )
-    from debezium_connector_spanner_spark.operators.decode import decode_mods
-    from debezium_connector_spanner_spark.sources.event_schema import (
-        EVENT_LOG_SCHEMA,
-        REPOS_SCHEMA_V1,
-    )
-
-    fx = os.path.join(tmp_root, "fx")
-    write_fixture(fx, GeneratorConfig(n_repos=4, paths_per_repo=3))
-    ev = spark.read.schema(EVENT_LOG_SCHEMA).parquet(os.path.join(fx, "events"))
-    a = decode_mods(ev, REPOS_SCHEMA_V1, use_pandas_udf=False, include_old=True)
-    b = decode_mods(ev, REPOS_SCHEMA_V1, use_pandas_udf=True, include_old=True)
-    cols = ["repo", "path", "op", "seq", "vals", "olds"]
-    ra = sorted(map(str, a.select(cols).collect()))
-    rb = sorted(map(str, b.select(cols).collect()))
-    assert ra == rb
-
-
-def test_cow_mode_matches_mor(spark, tmp_root):
-    """Copy-on-write and merge-on-read sinks must produce identical final
-    state."""
-    from debezium_connector_spanner_spark.fixtures.generator import (
-        EPOCH_MICROS,
-        GeneratorConfig,
-        write_fixture,
-    )
-    from debezium_connector_spanner_spark.sources.event_schema import REPOS_SCHEMA_V1
-    from debezium_connector_spanner_spark.streaming.engine import CdcReplayEngine
-
-    cfg = GeneratorConfig(n_repos=6, paths_per_repo=4, events_per_key_mean=3)
-    fx = os.path.join(tmp_root, "fx")
-    write_fixture(fx, cfg)
-    end = EPOCH_MICROS + cfg.duration_s * 1_000_000
-    outs = {}
-    for mode in ("mor", "cow"):
-        eng = CdcReplayEngine(
-            spark,
-            fx,
-            os.path.join(tmp_root, f"t-{mode}"),
-            os.path.join(tmp_root, f"c-{mode}"),
-            start_us=EPOCH_MICROS,
-            end_us=end,
-            n_batches=4,
-            initial_schema=REPOS_SCHEMA_V1,
-            base_df=spark.read.parquet(os.path.join(fx, "base_repos.parquet")),
-            n_buckets=4,
-            sink_mode=mode,
-        )
-        eng.run()
-        outs[mode] = sorted(map(str, eng.final_state().collect()))
-    assert outs["mor"] == outs["cow"]
-    assert len(outs["mor"]) > 0
-
-
 def test_embedding_near_dup_pairs(spark):
     """Embedding-cosine near-dup gate: every planted near-duplicate
     (cosine ~0.999 vs its source) is recovered by the LSH self-join, no

@@ -77,19 +77,18 @@ def test_explicit_null_update_applied(spark, tmp_root):
     assert got["lang"] is None and got["_w_lang"] is True
     assert got["commit"] == "c0" and got["content"] == "b0"
 
-    # and through the MERGE (both sink modes) against a base row
-    for mode in ("mor", "cow"):
-        root = os.path.join(tmp_root, f"tbl-{mode}")
-        base = spark.createDataFrame(
-            [("r1", "p1", "cb", "java", "bb")], REPOS_SCHEMA_V1.spark_struct()
-        )
-        t = LakeTable.create(
-            spark, root, REPOS_SCHEMA_V1.spark_struct(), ["repo", "path"], 2, base
-        )
-        merge_into(t, folded, target_schema=REPOS_SCHEMA_V1.spark_struct(), mode=mode)
-        out = t.read().collect()[0].asDict()
-        assert out["lang"] is None, mode
-        assert out["commit"] == "c0" and out["content"] == "b0", mode
+    # and through the MERGE against a base row
+    base = spark.createDataFrame(
+        [("r1", "p1", "cb", "java", "bb")], REPOS_SCHEMA_V1.spark_struct()
+    )
+    t = LakeTable.create(
+        spark, os.path.join(tmp_root, "tbl"), REPOS_SCHEMA_V1.spark_struct(),
+        ["repo", "path"], 2, base,
+    )
+    merge_into(t, folded, target_schema=REPOS_SCHEMA_V1.spark_struct())
+    out = t.read().collect()[0].asDict()
+    assert out["lang"] is None
+    assert out["commit"] == "c0" and out["content"] == "b0"
 
 
 def test_new_values_capture_op_from_mod_type(spark):
@@ -168,8 +167,8 @@ def test_mor_fold_out_of_order_batches(spark, tmp_root):
         return fold_changes(decoded, ["repo", "path"], ["commit", "lang", "content"])
 
     # newer batch (ts=5000) lands first; older batch (ts=1000) arrives late
-    merge_into(t, batch(5_000, "newer"), target_schema=REPOS_SCHEMA_V1.spark_struct(), mode="mor")
-    merge_into(t, batch(1_000, "older"), target_schema=REPOS_SCHEMA_V1.spark_struct(), mode="mor")
+    merge_into(t, batch(5_000, "newer"), target_schema=REPOS_SCHEMA_V1.spark_struct())
+    merge_into(t, batch(1_000, "older"), target_schema=REPOS_SCHEMA_V1.spark_struct())
     assert t.read().collect()[0]["commit"] == "newer"
     # and compaction preserves the resolution
     t.compact()

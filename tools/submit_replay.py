@@ -38,7 +38,6 @@ def main():
     p.add_argument("--end-us", type=int)
     p.add_argument("--n-batches", type=int, default=8)
     p.add_argument("--n-buckets", type=int, default=64)
-    p.add_argument("--sink-mode", default="mor", choices=["mor", "cow"])
     args = p.parse_args()
 
     # on a cluster, master/executors come from spark-submit; locally this
@@ -70,7 +69,6 @@ def main():
         initial_schema=REPOS_SCHEMA_V1,
         base_df=base if not os.path.exists(table or "") else None,
         n_buckets=args.n_buckets,
-        sink_mode=args.sink_mode,
     )
     totals = eng.run()
     print(json.dumps({"totals": totals, "final_rows": eng.final_state().count()}))
